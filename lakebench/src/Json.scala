@@ -1,0 +1,13 @@
+package lakebench
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+
+/** JSON for the result line, the report and the spans, through the
+  * Jackson that ships with Spark.
+  */
+object Json {
+  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
+
+  def apply(v: Any): String = mapper.writeValueAsString(v)
+}
